@@ -83,7 +83,11 @@ def __getattr__(name: str):
     # ``import sparkgraft``, ``from sparkgraft import ranking``, ...)
     try:
         return importlib.import_module(f".{name}", __name__)
-    except ModuleNotFoundError:
+    except ModuleNotFoundError as e:
+        # only a missing SUBMODULE is a missing attribute; a dependency
+        # missing inside an existing submodule must surface as itself
+        if e.name != f"{__name__}.{name}":
+            raise
         raise AttributeError(
             f"module {__name__!r} has no attribute {name!r}"
         ) from None

@@ -9,6 +9,17 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..proofs import multisets_equal
 from ..registry import query
+from ..tablelog import (
+    MOR_DELETE_CLASS,
+    DocCDFSource,
+    commit_snapshot,
+    data_files_of,
+    is_delete_file,
+    log_versions,
+    mor_read,
+    read_manifest,
+    split_head_files,
+)
 
 
 
@@ -2008,7 +2019,7 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot log (v1 base append, v2 delta append, v3 equality-delete
     tombstone for doc_id %{_DIX_MOD}=={_DIX_REM} — masking docs of BOTH
     slices), and the index is ITS OWN snapshot-log table whose every
-    version is committed by the feed consumer through `_commit_snapshot`
+    version is committed by the feed consumer through `commit_snapshot`
     (the `stream_cdf_materialized_view` maintenance pattern applied to a
     NON-AGGREGATE index):
 
@@ -2042,15 +2053,6 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from sparkgraft.scans import (
-        _MOR_DELETE_CLASS,
-        _commit_snapshot,
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
-    )
-    from sparkgraft.streaming import _doc_cdf_datasource
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]  # bounded scalar
     cut = (int(max_id) + 1) * _DIX_NUM // _DIX_DEN
@@ -2068,7 +2070,6 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d in (doc_log, idx_log, idx_root):
         os.makedirs(d)
 
-    del_seg = f"{os.sep}{_MOR_DELETE_CLASS}{os.sep}"
 
     # the documents table's history
     # base/delta staged in ONE partitioned write (was 2 sequential
@@ -2081,22 +2082,22 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") >= cut).cast("int"),
         os.path.join(root, "slices"),
     )
-    _commit_snapshot(doc_log, doc_slices[0])  # v1
-    _commit_snapshot(doc_log, doc_slices[1])  # v2
-    t3_dir = os.path.join(root, _MOR_DELETE_CLASS, "t3")
+    commit_snapshot(doc_log, doc_slices[0])  # v1
+    commit_snapshot(doc_log, doc_slices[1])  # v2
+    t3_dir = os.path.join(root, MOR_DELETE_CLASS, "t3")
     (
         docs.select("doc_id")
         .filter(F.col("doc_id") % _DIX_MOD == _DIX_REM)
         .coalesce(1)
         .write.parquet(t3_dir)
     )
-    _commit_snapshot(
-        doc_log, _data_files_of(t3_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        doc_log, data_files_of(t3_dir), extra={"op": "mor-delete"}
     )  # v3
 
     # THE MAINTAINER: one index-table commit per feed micro-batch
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        versions = _log_versions(idx_log)
+        versions = log_versions(idx_log)
         if versions and versions[-1] >= batch_id + 1:
             return  # redelivered batch: the commit already landed
         # one source scan per batch: the insert probe, the minhash
@@ -2122,23 +2123,23 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 band_keys(minhash_signatures(ins)).coalesce(1).write.parquet(
                     add_dir
                 )
-                adds += _data_files_of(add_dir)
+                adds += data_files_of(add_dir)
             if "delete" in kinds:
                 dels = batch_df.filter(
                     F.col("change_type") == "delete"
                 ).select("doc_id")
                 t_dir = os.path.join(
-                    idx_root, _MOR_DELETE_CLASS, f"b{batch_id:05d}"
+                    idx_root, MOR_DELETE_CLASS, f"b{batch_id:05d}"
                 )
                 dels.coalesce(1).write.parquet(t_dir)
-                adds += _data_files_of(t_dir)
+                adds += data_files_of(t_dir)
             if not adds:
                 raise RuntimeError(f"feed batch {batch_id} carried no events")
-            _commit_snapshot(idx_log, adds)
+            commit_snapshot(idx_log, adds)
         finally:
             batch_df.unpersist()
 
-    spark.dataSource.register(_doc_cdf_datasource())
+    spark.dataSource.register(DocCDFSource)
     q = (
         spark.readStream.format("sparkgraft_doc_cdf")
         .option("log_dir", doc_log)
@@ -2152,16 +2153,15 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
 
-    idx_versions = _log_versions(idx_log)
+    idx_versions = log_versions(idx_log)
     if len(idx_versions) != 3:  # one commit per feed batch, no rebuilds
         raise RuntimeError(
             f"index log has {len(idx_versions)} versions, wanted 3"
         )
 
     # the maintained index: MOR read of the index table's head
-    head = _read_manifest(idx_log, idx_versions[-1])["files"]
-    idx_data = [f for f in head if del_seg not in f]
-    idx_tombs = [f for f in head if del_seg in f]
+    head = read_manifest(idx_log, idx_versions[-1])["files"]
+    idx_data, idx_tombs = split_head_files(head)
     if not idx_data or not idx_tombs:
         raise RuntimeError("index head lost a file class")
     committed = spark.read.parquet(*idx_data)
@@ -2183,18 +2183,8 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # THE PROOF: index-after-feed == index-rebuilt-from-head (the docs
     # table's MOR read), exact frame equality across the delete commit
-    doc_head = _read_manifest(doc_log, _log_versions(doc_log)[-1])["files"]
-    live_docs = spark.read.parquet(
-        *[f for f in doc_head if del_seg not in f]
-    ).join(
-        F.broadcast(
-            spark.read.parquet(
-                *[f for f in doc_head if del_seg in f]
-            ).select("doc_id")
-        ),
-        "doc_id",
-        "left_anti",
-    )
+    doc_head = read_manifest(doc_log, log_versions(doc_log)[-1])["files"]
+    live_docs = mor_read(spark, doc_head, "doc_id")
     rebuilt = band_keys(minhash_signatures(live_docs))
     if not multisets_equal(maintained, rebuilt):
         raise RuntimeError(
@@ -2316,15 +2306,6 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from sparkgraft.scans import (
-        _MOR_DELETE_CLASS,
-        _commit_snapshot,
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
-    )
-    from sparkgraft.streaming import _doc_cdf_datasource
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]  # bounded scalar
     c1 = (int(max_id) + 1) * _DIC_N1 // _DIC_DEN
@@ -2342,12 +2323,11 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_root = os.path.join(root, "idx")
     for d in (doc_log, idx_log, idx_root):
         os.makedirs(d)
-    del_seg = f"{os.sep}{_MOR_DELETE_CLASS}{os.sep}"
 
     def stage_docs(df: DataFrame, name: str) -> list[str]:
         d = os.path.join(root, name)
         df.coalesce(1).write.parquet(d)
-        return _data_files_of(d)
+        return data_files_of(d)
 
     # base/delta1/delta2 staged in ONE partitioned write (was 3
     # sequential filter+coalesce(1) scans of documents — _stage_slices
@@ -2364,23 +2344,23 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(2),
         os.path.join(root, "slices"),
     )
-    _commit_snapshot(doc_log, doc_slices[0])  # v1
-    _commit_snapshot(doc_log, doc_slices[1])  # v2
-    _commit_snapshot(
+    commit_snapshot(doc_log, doc_slices[0])  # v1
+    commit_snapshot(doc_log, doc_slices[1])  # v2
+    commit_snapshot(
         doc_log,
         stage_docs(
             docs.select("doc_id").filter(
                 F.col("doc_id") % _DIX_MOD == _DIX_REM
             ),
-            os.path.join(_MOR_DELETE_CLASS, "t3"),
+            os.path.join(MOR_DELETE_CLASS, "t3"),
         ),
         extra={"op": "mor-delete"},
     )  # v3
 
     def _applied_feed_batches() -> set:
         out = set()
-        for v in _log_versions(idx_log):
-            fb = _read_manifest(idx_log, v).get("feed_batch")
+        for v in log_versions(idx_log):
+            fb = read_manifest(idx_log, v).get("feed_batch")
             if fb is not None:
                 out.add(int(fb))
         return out
@@ -2409,23 +2389,23 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 band_keys(minhash_signatures(ins)).coalesce(1).write.parquet(
                     add_dir
                 )
-                adds += _data_files_of(add_dir)
+                adds += data_files_of(add_dir)
             if "delete" in kinds:
                 dels = batch_df.filter(
                     F.col("change_type") == "delete"
                 ).select("doc_id")
                 t_dir = os.path.join(
-                    idx_root, _MOR_DELETE_CLASS, f"b{batch_id:05d}"
+                    idx_root, MOR_DELETE_CLASS, f"b{batch_id:05d}"
                 )
                 dels.coalesce(1).write.parquet(t_dir)
-                adds += _data_files_of(t_dir)
+                adds += data_files_of(t_dir)
             if not adds:
                 raise RuntimeError(f"feed batch {batch_id} carried no events")
-            _commit_snapshot(idx_log, adds, extra={"feed_batch": batch_id})
+            commit_snapshot(idx_log, adds, extra={"feed_batch": batch_id})
         finally:
             batch_df.unpersist()
 
-    spark.dataSource.register(_doc_cdf_datasource())
+    spark.dataSource.register(DocCDFSource)
 
     def run_feed() -> None:
         q = (
@@ -2443,15 +2423,14 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
 
     run_feed()  # phase 1: doc v1-v3 -> index commits 1-3
-    if _log_versions(idx_log) != [1, 2, 3]:
+    if log_versions(idx_log) != [1, 2, 3]:
         raise RuntimeError(
-            f"phase-1 index log wrong: {_log_versions(idx_log)}"
+            f"phase-1 index log wrong: {log_versions(idx_log)}"
         )
 
     # ---- THE COMPACTION: apply the index tombstone, retire it ----
-    head_pre = _read_manifest(idx_log, 3)["files"]
-    idx_data = [f for f in head_pre if del_seg not in f]
-    idx_tombs = [f for f in head_pre if del_seg in f]
+    head_pre = read_manifest(idx_log, 3)["files"]
+    idx_data, idx_tombs = split_head_files(head_pre)
     if not idx_tombs:
         raise RuntimeError("phase 1 left no index tombstone to compact")
     pre_mor = (
@@ -2467,14 +2446,14 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clean_dir = os.path.join(idx_root, "compacted")
     pre_mor.coalesce(1).write.parquet(clean_dir)
-    _commit_snapshot(
+    commit_snapshot(
         idx_log,
-        _data_files_of(clean_dir),
+        data_files_of(clean_dir),
         remove_files=head_pre,
         extra={"op": "rewrite"},
     )  # index v4
-    head_mid = _read_manifest(idx_log, 4)["files"]
-    if any(del_seg in f for f in head_mid):
+    head_mid = read_manifest(idx_log, 4)["files"]
+    if any(is_delete_file(f) for f in head_mid):
         raise RuntimeError("compaction left index tombstones live")
     post = spark.read.parquet(*head_mid)
     if not multisets_equal(post, pre_mor):
@@ -2482,27 +2461,27 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- doc v4: delta2 lands AFTER the delete; the feed resumes ----
     # (slice 2 was staged in the single partitioned write above)
-    _commit_snapshot(doc_log, doc_slices[2])
+    commit_snapshot(doc_log, doc_slices[2])
     run_feed()  # phase 2: exactly one more commit, ON the compacted head
-    if _log_versions(idx_log) != [1, 2, 3, 4, 5]:
+    if log_versions(idx_log) != [1, 2, 3, 4, 5]:
         raise RuntimeError(
-            f"phase-2 index log wrong: {_log_versions(idx_log)}"
+            f"phase-2 index log wrong: {log_versions(idx_log)}"
         )
-    v5 = _read_manifest(idx_log, 5)
+    v5 = read_manifest(idx_log, 5)
     if int(v5.get("feed_batch", -1)) != 3:
         raise RuntimeError(
             "the resumed feed replayed history instead of continuing: "
             f"{v5.get('feed_batch')}"
         )
     new_files = sorted(set(v5["files"]) - set(head_mid))
-    if not new_files or any(del_seg in f for f in new_files):
+    if not new_files or any(is_delete_file(f) for f in new_files):
         raise RuntimeError(f"phase-2 delta wrong: {new_files}")
 
     # ---- final: head index == rebuild from the docs head's LIVE rows
     maintained = spark.read.parquet(*v5["files"]).localCheckpoint()
-    doc_head = _read_manifest(doc_log, _log_versions(doc_log)[-1])["files"]
+    doc_head = read_manifest(doc_log, log_versions(doc_log)[-1])["files"]
     live_docs = (
-        spark.read.parquet(*[f for f in doc_head if del_seg not in f])
+        spark.read.parquet(*split_head_files(doc_head)[0])
         # sequence scoping: the v3 tombstone masks only docs committed
         # before it — delta2 (v4) keeps its masked-key docs
         .filter(
@@ -2594,7 +2573,7 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     log, so version-travel needs an explicit BINDING). The maintainer
     (the `dedup_index_maintain` protocol) now STAMPS each index commit
     with the documents version whose feed batch produced it
-    (``extra={"docs_version": k}`` on `_commit_snapshot` — the
+    (``extra={"docs_version": k}`` on `commit_snapshot` — the
     mechanism real MV/index maintainers persist: Delta's MVs record
     the source table version a refresh read). AS-OF docs-version k
     then resolves the index as the newest index commit whose stamp is
@@ -2625,16 +2604,6 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from sparkgraft.scans import (
-        _MOR_DELETE_CLASS,
-        _commit_snapshot,
-        _data_files_of,
-        _log_versions,
-        _mor_read,
-        _read_manifest,
-    )
-    from sparkgraft.streaming import _doc_cdf_datasource
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]  # bounded scalar
     cut = (int(max_id) + 1) * _DIX_NUM // _DIX_DEN
@@ -2663,17 +2632,17 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") >= cut).cast("int"),
         os.path.join(root, "slices"),
     )
-    _commit_snapshot(doc_log, doc_slices[0])  # v1
-    _commit_snapshot(doc_log, doc_slices[1])  # v2
-    t3_dir = os.path.join(root, _MOR_DELETE_CLASS, "t3")
+    commit_snapshot(doc_log, doc_slices[0])  # v1
+    commit_snapshot(doc_log, doc_slices[1])  # v2
+    t3_dir = os.path.join(root, MOR_DELETE_CLASS, "t3")
     (
         docs.select("doc_id")
         .filter(F.col("doc_id") % _DIX_MOD == _DIX_REM)
         .coalesce(1)
         .write.parquet(t3_dir)
     )
-    _commit_snapshot(
-        doc_log, _data_files_of(t3_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        doc_log, data_files_of(t3_dir), extra={"op": "mor-delete"}
     )  # v3
 
     # the maintainer, stamping each index commit with its docs version
@@ -2708,8 +2677,8 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_v = int(src_vs[0])
         kinds = {r["change_type"] for r in probe}
         stamped = {
-            _read_manifest(idx_log, v).get("docs_version")
-            for v in _log_versions(idx_log)
+            read_manifest(idx_log, v).get("docs_version")
+            for v in log_versions(idx_log)
         }
         if src_v in stamped:
             return  # redelivered batch: its stamped commit already landed
@@ -2722,21 +2691,21 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             band_keys(minhash_signatures(ins)).coalesce(1).write.parquet(
                 add_dir
             )
-            adds += _data_files_of(add_dir)
+            adds += data_files_of(add_dir)
         if "delete" in kinds:
             dels = batch_df.filter(F.col("change_type") == "delete").select(
                 "doc_id"
             )
             t_dir = os.path.join(
-                idx_root, _MOR_DELETE_CLASS, f"b{batch_id:05d}"
+                idx_root, MOR_DELETE_CLASS, f"b{batch_id:05d}"
             )
             dels.coalesce(1).write.parquet(t_dir)
-            adds += _data_files_of(t_dir)
+            adds += data_files_of(t_dir)
         if not adds:
             raise RuntimeError(f"feed batch {batch_id} carried no events")
-        _commit_snapshot(idx_log, adds, extra={"docs_version": src_v})
+        commit_snapshot(idx_log, adds, extra={"docs_version": src_v})
 
-    spark.dataSource.register(_doc_cdf_datasource())
+    spark.dataSource.register(DocCDFSource)
     q = (
         spark.readStream.format("sparkgraft_doc_cdf")
         .option("log_dir", doc_log)
@@ -2750,9 +2719,9 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
 
-    idx_versions = _log_versions(idx_log)
+    idx_versions = log_versions(idx_log)
     stamps = [
-        _read_manifest(idx_log, v).get("docs_version")
+        read_manifest(idx_log, v).get("docs_version")
         for v in idx_versions
     ]
     # None guard FIRST (sorted() on a None-bearing list raises the
@@ -2773,15 +2742,15 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = max(
             v
             for v in idx_versions
-            if _read_manifest(idx_log, v)["docs_version"] <= k
+            if read_manifest(idx_log, v)["docs_version"] <= k
         )
-        return _mor_read(
-            spark, _read_manifest(idx_log, v)["files"], "doc_id"
+        return mor_read(
+            spark, read_manifest(idx_log, v)["files"], "doc_id"
         ).localCheckpoint()
 
     def docs_asof(k: int) -> DataFrame:
-        return _mor_read(
-            spark, _read_manifest(doc_log, k)["files"], "doc_id"
+        return mor_read(
+            spark, read_manifest(doc_log, k)["files"], "doc_id"
         )
 
     asof = {k: idx_asof(k) for k in (2, 3)}
@@ -2898,7 +2867,7 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     - v1: base append (doc_id, text).
     - v2: METADATA-ONLY add-column commit — ``schema_version: 2``
-      stamped, file list UNCHANGED (`_commit_snapshot` with zero
+      stamped, file list UNCHANGED (`commit_snapshot` with zero
       adds). The shared planner's file-delta arithmetic makes this
       zero events BY CONSTRUCTION (cur − prev = ∅), pinned by the
       planner pytest; the feed still delivers the (empty) batch.
@@ -2936,16 +2905,6 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from sparkgraft.scans import (
-        _MOR_DELETE_CLASS,
-        _commit_snapshot,
-        _data_files_of,
-        _log_versions,
-        _mor_read,
-        _read_manifest,
-    )
-    from sparkgraft.streaming import _doc_cdf_datasource
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]  # bounded scalar
     cut = (int(max_id) + 1) * _DIX_NUM // _DIX_DEN
@@ -2966,9 +2925,9 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base_dir = os.path.join(root, "base")
     docs.filter(F.col("doc_id") < cut).coalesce(1).write.parquet(base_dir)
-    _commit_snapshot(doc_log, _data_files_of(base_dir))  # v1
+    commit_snapshot(doc_log, data_files_of(base_dir))  # v1
     # v2: the METADATA-ONLY add-column commit — zero file delta
-    _commit_snapshot(doc_log, [], extra={"schema_version": 2})
+    commit_snapshot(doc_log, [], extra={"schema_version": 2})
     # v3: post-evolution append, files CARRY the evolved column
     delta_dir = os.path.join(root, "delta")
     (
@@ -2982,17 +2941,17 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(delta_dir)
     )
-    _commit_snapshot(doc_log, _data_files_of(delta_dir))
+    commit_snapshot(doc_log, data_files_of(delta_dir))
     # v4: cross-generation equality tombstone
-    t4_dir = os.path.join(root, _MOR_DELETE_CLASS, "t4")
+    t4_dir = os.path.join(root, MOR_DELETE_CLASS, "t4")
     (
         docs.select("doc_id")
         .filter(F.col("doc_id") % _DIX_MOD == _DIX_REM)
         .coalesce(1)
         .write.parquet(t4_dir)
     )
-    _commit_snapshot(
-        doc_log, _data_files_of(t4_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        doc_log, data_files_of(t4_dir), extra={"op": "mor-delete"}
     )
 
     delivered: list[tuple[int, int]] = []  # (batch_id, n_index_commits)
@@ -3024,13 +2983,13 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not src_vs:
             # the metadata-only commit: zero events -> the index log
             # is left UNTOUCHED (invariance, not an empty commit)
-            delivered.append((int(batch_id), len(_log_versions(idx_log))))
+            delivered.append((int(batch_id), len(log_versions(idx_log))))
             return
         src_v = int(src_vs[0])
         kinds = {r["change_type"] for r in probe}
         stamped = {
-            _read_manifest(idx_log, v).get("docs_version")
-            for v in _log_versions(idx_log)
+            read_manifest(idx_log, v).get("docs_version")
+            for v in log_versions(idx_log)
         }
         if src_v in stamped:
             return  # redelivered: its stamped commit already landed
@@ -3043,21 +3002,21 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             band_keys(minhash_signatures(ins)).coalesce(1).write.parquet(
                 add_dir
             )
-            adds += _data_files_of(add_dir)
+            adds += data_files_of(add_dir)
         if "delete" in kinds:
             dels = batch_df.filter(F.col("change_type") == "delete").select(
                 "doc_id"
             )
             t_dir = os.path.join(
-                idx_root, _MOR_DELETE_CLASS, f"b{batch_id:05d}"
+                idx_root, MOR_DELETE_CLASS, f"b{batch_id:05d}"
             )
             dels.coalesce(1).write.parquet(t_dir)
-            adds += _data_files_of(t_dir)
+            adds += data_files_of(t_dir)
         if adds:
-            _commit_snapshot(idx_log, adds, extra={"docs_version": src_v})
-        delivered.append((int(batch_id), len(_log_versions(idx_log))))
+            commit_snapshot(idx_log, adds, extra={"docs_version": src_v})
+        delivered.append((int(batch_id), len(log_versions(idx_log))))
 
-    spark.dataSource.register(_doc_cdf_datasource())
+    spark.dataSource.register(DocCDFSource)
     q = (
         spark.readStream.format("sparkgraft_doc_cdf")
         .option("log_dir", doc_log)
@@ -3080,15 +3039,15 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata_batch_empty = growth == [1, 0, 1, 1]
     if not metadata_batch_empty:
         raise RuntimeError(f"index commit growth wrong: {growth}")
-    idx_versions = _log_versions(idx_log)
+    idx_versions = log_versions(idx_log)
     stamps = [
-        _read_manifest(idx_log, v)["docs_version"] for v in idx_versions
+        read_manifest(idx_log, v)["docs_version"] for v in idx_versions
     ]
     if stamps != [1, 3, 4]:
         raise RuntimeError(f"docs_version stamps wrong: {stamps}")
 
-    head = _read_manifest(idx_log, idx_versions[-1])["files"]
-    maintained = _mor_read(spark, head, "doc_id").localCheckpoint()
+    head = read_manifest(idx_log, idx_versions[-1])["files"]
+    maintained = mor_read(spark, head, "doc_id").localCheckpoint()
 
     # post-evolution docs ARE indexed (the v3 generation's live rows)
     n_evo = maintained.filter(F.col("doc_id") >= cut).count()
@@ -3102,8 +3061,8 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # capstone: maintained == rebuild from the head's live docs
-    doc_head = _read_manifest(doc_log, _log_versions(doc_log)[-1])["files"]
-    live_docs = _mor_read(spark, doc_head, "doc_id").select(
+    doc_head = read_manifest(doc_log, log_versions(doc_log)[-1])["files"]
+    live_docs = mor_read(spark, doc_head, "doc_id").select(
         "doc_id", "text"
     )
     rebuilt = band_keys(minhash_signatures(live_docs))

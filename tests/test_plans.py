@@ -1350,17 +1350,17 @@ def test_mor_delete_read_is_broadcast_anti_join(spark):
 
     from pyspark.sql import functions as F
 
-    from sparkgraft.scans import (
-        _log_versions,
-        _read_manifest,
-        _scratch,
-        _split_head_files,
+    from sparkgraft.scans import _scratch
+    from sparkgraft.tablelog import (
+        log_versions,
+        read_manifest,
+        split_head_files,
     )
 
     sparkgraft.QUERIES["sink_merge_on_read_delete"](spark, SF_DIR).collect()
     log_dir = os.path.join(_scratch(SF_DIR, "mor_delete_table"), "log")
-    v2 = _read_manifest(log_dir, 2)["files"]
-    data, dels = _split_head_files(v2)
+    v2 = read_manifest(log_dir, 2)["files"]
+    data, dels = split_head_files(v2)
     keys = spark.read.parquet(*dels).select("o_orderkey")
     mor = spark.read.parquet(*data).join(
         F.broadcast(keys), "o_orderkey", "left_anti"

@@ -60,6 +60,44 @@ def test_write_with_probe_empty_batch(spark):
     assert spark.read.parquet(out).count() == 0
 
 
+def test_write_with_probe_raises_on_null_probe(spark):
+    """collect_set drops NULLs, so a NULL probe value would vanish from
+    the probe; the observed NULL count must make the call raise."""
+    import pytest
+
+    from sparkgraft.streaming import _write_with_probe
+
+    df = spark.createDataFrame(
+        [(1, 10), (None, 20), (2, 30)], "version int, cents long"
+    )
+    out = os.path.join(tempfile.mkdtemp(), "nullprobe")
+    with pytest.raises(RuntimeError, match="NULL on 1 row"):
+        _write_with_probe(df, out, "version")
+
+
+def test_lazy_init_reraises_missing_dependency(monkeypatch):
+    """A ModuleNotFoundError for anything but the requested submodule
+    itself (a dependency missing inside it) must propagate, not turn
+    into an AttributeError; a genuinely absent submodule still reads
+    as a missing attribute."""
+    import importlib
+
+    import pytest
+
+    import sparkgraft
+
+    with pytest.raises(AttributeError):
+        sparkgraft.__getattr__("no_such_submodule")
+
+    def missing_pyarrow(name, package=None):
+        raise ModuleNotFoundError("No module named 'pyarrow'", name="pyarrow")
+
+    monkeypatch.setattr(importlib, "import_module", missing_pyarrow)
+    with pytest.raises(ModuleNotFoundError) as ei:
+        sparkgraft.__getattr__("tablelog")
+    assert ei.value.name == "pyarrow"
+
+
 def test_lazy_init_registry_complete():
     """The PEP 562 lazy __init__ must expose the same fully-populated
     registry the eager form did — checked in a FRESH interpreter so the

@@ -112,7 +112,7 @@ def test_partitioned_cdf_reader_restart_clamp(tmp_path):
     offset (state_dir) instead of re-announcing version 0, and a
     replayed partitions() call must re-sync the in-memory cursor so
     latestOffset never goes backward."""
-    from sparkgraft.streaming import _snapshot_cdf_partitioned_datasource
+    from sparkgraft.tablelog import SnapshotCDFSource
 
     log_dir = str(tmp_path / "log")
     state_dir = str(tmp_path / "state")
@@ -121,7 +121,7 @@ def test_partitioned_cdf_reader_restart_clamp(tmp_path):
         with open(os.path.join(log_dir, f"v{v}.json"), "w") as fh:
             json.dump({"files": [f"f{i}" for i in range(v)]}, fh)
 
-    src = _snapshot_cdf_partitioned_datasource()(
+    src = SnapshotCDFSource(
         {"log_dir": log_dir, "state_dir": state_dir}
     )
     r1 = src.streamReader(None)
@@ -135,7 +135,7 @@ def test_partitioned_cdf_reader_restart_clamp(tmp_path):
     assert r2.latestOffset() == {"version": 3}
 
     # no state_dir: a replayed partitions(start, end) re-syncs the cursor
-    src2 = _snapshot_cdf_partitioned_datasource()({"log_dir": log_dir})
+    src2 = SnapshotCDFSource({"log_dir": log_dir})
     r3 = src2.streamReader(None)
     r3.partitions({"version": 1}, {"version": 2})  # checkpointed replay
     assert r3.latestOffset() == {"version": 3}

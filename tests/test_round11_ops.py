@@ -62,39 +62,36 @@ def test_rewrite_data_files_retires_both_delete_encodings(spark):
     """After the key runs, its log must show: 4 linear commits, a head
     with zero delete-class files and exactly 2 data files, and both
     delete structures live at v3 (equality + positional)."""
-    from sparkgraft.scans import (
-        _log_versions,
-        _read_manifest,
-        _scratch,
-        _split_head_files,
+    from sparkgraft.scans import _scratch
+    from sparkgraft.tablelog import (
+        log_versions,
+        read_manifest,
+        split_head_files,
     )
 
     sparkgraft.QUERIES["sink_rewrite_data_files"](spark, SF_DIR)
     log_dir = os.path.join(_scratch(SF_DIR, "rdf_table"), "log")
-    assert _log_versions(log_dir) == [1, 2, 3, 4]
-    v3_data, v3_dels = _split_head_files(_read_manifest(log_dir, 3)["files"])
+    assert log_versions(log_dir) == [1, 2, 3, 4]
+    v3_data, v3_dels = split_head_files(read_manifest(log_dir, 3)["files"])
     assert len(v3_data) == 4 and len(v3_dels) == 2
-    head = _read_manifest(log_dir, 4)
+    head = read_manifest(log_dir, 4)
     assert head.get("op") == "rewrite"
-    h_data, h_dels = _split_head_files(head["files"])
+    h_data, h_dels = split_head_files(head["files"])
     assert len(h_data) == 2 and h_dels == []
     # compaction never deletes bytes: every retired file still on disk
-    assert all(os.path.exists(f) for f in _read_manifest(log_dir, 3)["files"])
+    assert all(os.path.exists(f) for f in read_manifest(log_dir, 3)["files"])
 
 
 def test_rewrite_data_files_digest_matches_predicates(spark):
     """The compacted head must equal the doubly-filtered base: neither
     delete encoding leaked a row through, in either direction."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import (
-        _read_manifest,
-        _scratch,
-        _split_head_files,
-    )
+    from sparkgraft.scans import _scratch
+    from sparkgraft.tablelog import read_manifest, split_head_files
 
     sparkgraft.QUERIES["sink_rewrite_data_files"](spark, SF_DIR)
     log_dir = os.path.join(_scratch(SF_DIR, "rdf_table"), "log")
-    h_data, _ = _split_head_files(_read_manifest(log_dir, 4)["files"])
+    h_data, _ = split_head_files(read_manifest(log_dir, 4)["files"])
     got = (
         spark.read.parquet(*h_data)
         .agg(
@@ -193,21 +190,17 @@ def test_multi_table_publish_crash_protocol(spark):
     the on-disk txn log afterwards: exactly two txn manifests, the head
     binding both tables, and the crashed-then-restaged fact2 files all
     referenced by txn2 and none by txn1."""
-    from sparkgraft.scans import (
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
-        _scratch,
-    )
+    from sparkgraft.scans import _scratch
+    from sparkgraft.tablelog import data_files_of, log_versions, read_manifest
 
     sparkgraft.QUERIES["sink_multi_table_publish"](spark, SF_DIR)
     root = _scratch(SF_DIR, "mtp_txn")
     txn_dir = os.path.join(root, "txnlog")
-    assert _log_versions(txn_dir) == [1, 2]
-    t1 = _read_manifest(txn_dir, 1)["tables"]
-    t2 = _read_manifest(txn_dir, 2)["tables"]
+    assert log_versions(txn_dir) == [1, 2]
+    t1 = read_manifest(txn_dir, 1)["tables"]
+    t2 = read_manifest(txn_dir, 2)["tables"]
     assert set(t1) == set(t2) == {"fact", "dim"}
-    fact2_files = set(_data_files_of(os.path.join(root, "fact2")))
+    fact2_files = set(data_files_of(os.path.join(root, "fact2")))
     assert fact2_files <= set(t2["fact"])
     assert not (fact2_files & set(t1["fact"]))
     # txn2 strictly grows both tables (the append transaction)
@@ -236,28 +229,28 @@ def test_rewrite_delete_race_log_shape(spark):
     """After the key runs: 4 linear commits, the two tombstone commits
     stamped mor-delete, the final commit a rewrite with a delete-free
     head — and the stale staged files still on disk as orphans."""
-    from sparkgraft.scans import (
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
-        _scratch,
-        _split_head_files,
+    from sparkgraft.scans import _scratch
+    from sparkgraft.tablelog import (
+        data_files_of,
+        log_versions,
+        read_manifest,
+        split_head_files,
     )
 
     sparkgraft.QUERIES["sink_rewrite_delete_race"](spark, SF_DIR)
     root = _scratch(SF_DIR, "rdr_table")
     log_dir = os.path.join(root, "log")
-    assert _log_versions(log_dir) == [1, 2, 3, 4]
-    assert _read_manifest(log_dir, 2).get("op") == "mor-delete"
-    assert _read_manifest(log_dir, 3).get("op") == "mor-delete"
-    assert _read_manifest(log_dir, 4).get("op") == "rewrite"
-    _, dels = _split_head_files(_read_manifest(log_dir, 4)["files"])
+    assert log_versions(log_dir) == [1, 2, 3, 4]
+    assert read_manifest(log_dir, 2).get("op") == "mor-delete"
+    assert read_manifest(log_dir, 3).get("op") == "mor-delete"
+    assert read_manifest(log_dir, 4).get("op") == "rewrite"
+    _, dels = split_head_files(read_manifest(log_dir, 4)["files"])
     assert dels == []
     # the refused rewrite's staging is an orphan, never referenced
-    stale = set(_data_files_of(os.path.join(root, "stale_rewrite")))
+    stale = set(data_files_of(os.path.join(root, "stale_rewrite")))
     assert stale
     for v in (1, 2, 3, 4):
-        assert not (stale & set(_read_manifest(log_dir, v)["files"]))
+        assert not (stale & set(read_manifest(log_dir, v)["files"]))
 
 
 def test_dedup_near_incremental_completeness(spark):
@@ -308,14 +301,15 @@ def test_multi_table_conflict_log_merge(spark):
     """After the key runs: three txn manifests; v2 overlays only the
     fact (dim unchanged from v1), v3 overlays only the dim (fact
     carried from v2) — the rebase semantics, checked on disk."""
-    from sparkgraft.scans import _log_versions, _read_manifest, _scratch
+    from sparkgraft.scans import _scratch
+    from sparkgraft.tablelog import log_versions, read_manifest
 
     sparkgraft.QUERIES["sink_multi_table_conflict"](spark, SF_DIR)
     txn_dir = os.path.join(_scratch(SF_DIR, "mtc_txn"), "txnlog")
-    assert _log_versions(txn_dir) == [1, 2, 3]
-    t1 = _read_manifest(txn_dir, 1)["tables"]
-    t2 = _read_manifest(txn_dir, 2)["tables"]
-    t3 = _read_manifest(txn_dir, 3)["tables"]
+    assert log_versions(txn_dir) == [1, 2, 3]
+    t1 = read_manifest(txn_dir, 1)["tables"]
+    t2 = read_manifest(txn_dir, 2)["tables"]
+    t3 = read_manifest(txn_dir, 3)["tables"]
     assert t2["dim"] == t1["dim"] and set(t1["fact"]) < set(t2["fact"])
     assert t3["fact"] == t2["fact"] and set(t2["dim"]) < set(t3["dim"])
 
@@ -324,27 +318,28 @@ def test_multi_table_vacuum_classes(spark):
     """After the key runs: the crashed staging and txn1's replaced dim
     files are gone from disk; every retained-txn file survives; the
     txn log itself is untouched (3 manifests)."""
-    from sparkgraft.scans import _log_versions, _read_manifest, _scratch
+    from sparkgraft.scans import _scratch
+    from sparkgraft.tablelog import log_versions, read_manifest
 
     sparkgraft.QUERIES["sink_multi_table_vacuum"](spark, SF_DIR)
     root = _scratch(SF_DIR, "mtv_txn")
     txn_dir = os.path.join(root, "txnlog")
-    assert _log_versions(txn_dir) == [1, 2, 3]
+    assert log_versions(txn_dir) == [1, 2, 3]
     # collected: everything under the crashed staging dir
     crash_dir = os.path.join(root, "staging", "fact2_crash")
     left = [f for f in os.listdir(crash_dir) if f.endswith(".parquet")]
     assert left == []
     # collected: txn1's dim files (replaced at txn2, expired by retention)
-    for f in _read_manifest(txn_dir, 1)["tables"]["dim"]:
+    for f in read_manifest(txn_dir, 1)["tables"]["dim"]:
         assert not os.path.exists(f)
     # survivors: every file of the retained window intact
     for v in (2, 3):
-        for fl in _read_manifest(txn_dir, v)["tables"].values():
+        for fl in read_manifest(txn_dir, v)["tables"].values():
             assert all(os.path.exists(f) for f in fl)
 
 
 def test_commit_rewrite_validation_and_rebase(spark, tmp_path):
-    """Protocol-level coverage of the review-fixed `_commit_rewrite`:
+    """Protocol-level coverage of the review-fixed `commit_rewrite`:
     a tombstone commit between plan and commit raises CommitConflict;
     a plain append between plan and commit rebases and commits; and a
     raw manifest written by a racer (no helper involved) is still seen
@@ -354,12 +349,12 @@ def test_commit_rewrite_validation_and_rebase(spark, tmp_path):
     these cases pin the validation itself."""
     import json
 
-    from sparkgraft.scans import (
+    from sparkgraft.tablelog import (
         CommitConflict,
-        _commit_rewrite,
-        _commit_snapshot,
-        _log_versions,
-        _read_manifest,
+        commit_rewrite,
+        commit_snapshot,
+        log_versions,
+        read_manifest,
     )
 
     def mklog(name):
@@ -379,29 +374,29 @@ def test_commit_rewrite_validation_and_rebase(spark, tmp_path):
     # case 1: racer tombstone AFTER plan -> CommitConflict
     log1 = mklog("log1")
     base = fake_files("t1/data", ["a.parquet", "b.parquet"])
-    _commit_snapshot(log1, base)  # v1 (the plan point)
+    commit_snapshot(log1, base)  # v1 (the plan point)
     tomb = fake_files("t1/deletes/d", ["t.parquet"])
-    _commit_snapshot(log1, tomb, extra={"op": "mor-delete"})  # v2: racer
+    commit_snapshot(log1, tomb, extra={"op": "mor-delete"})  # v2: racer
     clean = fake_files("t1/clean", ["c.parquet"])
     try:
-        _commit_rewrite(log1, clean, remove_files=base, planned_at=1)
+        commit_rewrite(log1, clean, remove_files=base, planned_at=1)
         raise AssertionError("stale rewrite committed over the tombstone")
     except CommitConflict:
         pass
-    assert _log_versions(log1) == [1, 2]  # head unmoved
+    assert log_versions(log1) == [1, 2]  # head unmoved
 
     # case 2: plain append after plan -> rebase succeeds, append survives
     log2 = mklog("log2")
     base2 = fake_files("t2/data", ["a.parquet"])
-    _commit_snapshot(log2, base2)  # v1 (plan point)
+    commit_snapshot(log2, base2)  # v1 (plan point)
     app = fake_files("t2/app", ["n.parquet"])
-    _commit_snapshot(log2, app)  # v2: concurrent APPEND (no deletes)
+    commit_snapshot(log2, app)  # v2: concurrent APPEND (no deletes)
     clean2 = fake_files("t2/clean", ["c.parquet"])
-    v, retries = _commit_rewrite(
+    v, retries = commit_rewrite(
         log2, clean2, remove_files=base2, planned_at=1
     )
     assert v == 3
-    head = _read_manifest(log2, 3)
+    head = read_manifest(log2, 3)
     assert sorted(head["files"]) == sorted(app + clean2)
     assert head.get("op") == "rewrite"
 
@@ -410,42 +405,42 @@ def test_commit_rewrite_validation_and_rebase(spark, tmp_path):
     # its added delete file and refuse
     log3 = mklog("log3")
     base3 = fake_files("t3/data", ["a.parquet"])
-    _commit_snapshot(log3, base3)  # v1 (plan point)
+    commit_snapshot(log3, base3)  # v1 (plan point)
     tomb3 = fake_files("t3/deletes/d", ["t.parquet"])
     with open(f"{log3}/v2.json", "w") as fh:  # racer wins the CAS for v2
         json.dump({"snapshot": 2, "files": sorted(base3 + tomb3),
                    "op": "mor-delete"}, fh)
     clean3 = fake_files("t3/clean", ["c.parquet"])
     try:
-        _commit_rewrite(log3, clean3, remove_files=base3, planned_at=1)
+        commit_rewrite(log3, clean3, remove_files=base3, planned_at=1)
         raise AssertionError("retry path ignored the racer's tombstone")
     except CommitConflict:
         pass
 
 
 def test_txn_commit_rebase_and_same_table_conflict(spark, tmp_path):
-    """Protocol-level coverage of `_txn_commit`: a disjoint-table racer
+    """Protocol-level coverage of `txn_commit`: a disjoint-table racer
     rebases (winner's update survives), a same-table racer aborts."""
-    from sparkgraft.scans import CommitConflict, _txn_commit, _txn_publish
+    from sparkgraft.tablelog import CommitConflict, txn_commit, txn_publish
 
     txn = str(tmp_path / "txn")
     import os as _os
 
     _os.makedirs(txn)
-    _txn_publish(txn, 1, {"fact": ["f1"], "dim": ["d1"]})
+    txn_publish(txn, 1, {"fact": ["f1"], "dim": ["d1"]})
     # A advances the fact
-    v2, r2, _ = _txn_commit(txn, {"fact": ["f1", "f2"]}, read_at=1)
+    v2, r2, _ = txn_commit(txn, {"fact": ["f1", "f2"]}, read_at=1)
     assert (v2, r2) == (2, 0)
     # B read v1 and writes the DIM: disjoint -> rebases onto A's head
-    v3, _, _ = _txn_commit(txn, {"dim": ["d1", "d2"]}, read_at=1)
+    v3, _, _ = txn_commit(txn, {"dim": ["d1", "d2"]}, read_at=1)
     assert v3 == 3
-    from sparkgraft.scans import _read_manifest
+    from sparkgraft.tablelog import read_manifest
 
-    head = _read_manifest(txn, 3)["tables"]
+    head = read_manifest(txn, 3)["tables"]
     assert head == {"fact": ["f1", "f2"], "dim": ["d1", "d2"]}
     # C read v1 and writes the FACT: same-table -> abort
     try:
-        _txn_commit(txn, {"fact": ["f1", "f9"]}, read_at=1)
+        txn_commit(txn, {"fact": ["f1", "f9"]}, read_at=1)
         raise AssertionError("same-table racer committed")
     except CommitConflict:
         pass
@@ -463,8 +458,8 @@ def test_cdf_full_matrix_composition(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
-    from sparkgraft.streaming import _mor_cdf_datasource
+    from sparkgraft.tablelog import commit_snapshot, data_files_of
+    from sparkgraft.tablelog import MORCDFSource
 
     root = str(tmp_path / "matrix")
     log_dir = _os.path.join(root, "log")
@@ -478,15 +473,15 @@ def test_cdf_full_matrix_composition(spark, tmp_path):
     )
     base_dir = _os.path.join(root, "base")
     o.repartition(2).write.parquet(base_dir)
-    base = _data_files_of(base_dir)
-    _commit_snapshot(log_dir, base)  # v1
+    base = data_files_of(base_dir)
+    commit_snapshot(log_dir, base)  # v1
 
     eq_dir = _os.path.join(root, "deletes", "eq")
     o.filter(F.col("o_orderkey") % 10 == 0).select(
         "o_orderkey"
     ).coalesce(1).write.parquet(eq_dir)
-    _commit_snapshot(
-        log_dir, _data_files_of(eq_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        log_dir, data_files_of(eq_dir), extra={"op": "mor-delete"}
     )  # v2
 
     pos_dir = _os.path.join(root, "deletes", "pos", "v3")
@@ -504,16 +499,16 @@ def test_cdf_full_matrix_composition(spark, tmp_path):
         .coalesce(1)
         .write.parquet(pos_dir)
     )
-    _commit_snapshot(
-        log_dir, _data_files_of(pos_dir), extra={"op": "pos-delete"}
+    commit_snapshot(
+        log_dir, data_files_of(pos_dir), extra={"op": "pos-delete"}
     )  # v3
 
     # v4: the REWRITE — apply both structures, retire everything
     clean_dir = _os.path.join(root, "clean")
-    eq_keys = spark.read.parquet(*_data_files_of(eq_dir)).select(
+    eq_keys = spark.read.parquet(*data_files_of(eq_dir)).select(
         "o_orderkey"
     )
-    dv = spark.read.parquet(*_data_files_of(pos_dir))
+    dv = spark.read.parquet(*data_files_of(pos_dir))
     (
         spark.read.parquet(*base)
         .withColumn(
@@ -527,10 +522,10 @@ def test_cdf_full_matrix_composition(spark, tmp_path):
         .repartition(1)
         .write.parquet(clean_dir)
     )
-    head_v3 = base + _data_files_of(eq_dir) + _data_files_of(pos_dir)
-    _commit_snapshot(
+    head_v3 = base + data_files_of(eq_dir) + data_files_of(pos_dir)
+    commit_snapshot(
         log_dir,
-        _data_files_of(clean_dir),
+        data_files_of(clean_dir),
         remove_files=head_v3,
         extra={"op": "rewrite"},
     )  # v4
@@ -540,9 +535,9 @@ def test_cdf_full_matrix_composition(spark, tmp_path):
         (F.col("o_orderkey") + F.lit(4_000_000_000)).alias("o_orderkey"),
         "cents",
     ).coalesce(1).write.parquet(app_dir)
-    _commit_snapshot(log_dir, _data_files_of(app_dir))  # v5
+    commit_snapshot(log_dir, data_files_of(app_dir))  # v5
 
-    spark.dataSource.register(_mor_cdf_datasource())
+    spark.dataSource.register(MORCDFSource)
     batches: dict[int, int] = {}
 
     def sink(batch_df, batch_id):
@@ -587,8 +582,8 @@ def test_cdf_full_matrix_composition(spark, tmp_path):
         F.sum(sign * F.col("cents")).cast("long").alias("c"),
     ).collect()[0]
     head = (
-        spark.read.parquet(*_data_files_of(clean_dir))
-        .unionByName(spark.read.parquet(*_data_files_of(app_dir)))
+        spark.read.parquet(*data_files_of(clean_dir))
+        .unionByName(spark.read.parquet(*data_files_of(app_dir)))
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum("cents").cast("long").alias("c"),

@@ -13,6 +13,7 @@ import json
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 import sparkgraft
@@ -227,48 +228,77 @@ def test_cdf_cross_table_state_artifacts(spark):
         assert json.load(fh)["version"] == 5
 
 
-def test_mor_cdf_same_commit_mixed_encodings_emit_once(spark, tmp_path):
+# (source class, payload column, payload of key k) for each snapshot-log
+# feed; the key column is the reader's COLUMNS[0]
+_CDF_PAYLOADS = {
+    "orders": ("MORCDFSource", "cents", lambda k: k * 100),
+    "doc": ("DocCDFSource", "text", lambda k: f"doc {k}"),
+    "emb": ("EmbCDFSource", "embedding", lambda k: [float(k), 0.5]),
+}
+
+
+@pytest.mark.parametrize("payload", sorted(_CDF_PAYLOADS))
+def test_mor_cdf_same_commit_mixed_encodings_emit_once(payload, tmp_path):
     """One commit adds BOTH a positional DV and an equality tombstone
-    whose masks OVERLAP: a row masked by both must emit exactly one
-    delete event (the DV owns it — the planner rides the commit's own
-    DVs in the equality partitions' prior list). Drives the reader's
-    partitions()/read() directly against a hand-built log."""
+    whose masks OVERLAP. On a feed that accepts positional deletes
+    (orders), a row masked by both must emit exactly one delete event
+    (the DV owns it — the planner rides the commit's own DVs in the
+    equality partitions' prior list). Feeds scoped to equality deletes
+    (doc, emb) must refuse the DV loudly, and an equality-only commit
+    streams exactly the tombstoned rows with their payloads. Drives the
+    reader's partitions()/read() directly against hand-built logs."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sparkgraft.streaming import _mor_cdf_datasource
+    from sparkgraft import tablelog
+
+    src_name, col, value = _CDF_PAYLOADS[payload]
+    src = getattr(tablelog, src_name)
+    key = src.READER.COLUMNS[0]
 
     root = tmp_path / "mixed"
     (root / "deletes" / "pos").mkdir(parents=True)
-    log = root / "log"
-    log.mkdir()
-
     data = str(root / "base.parquet")
     keys = list(range(1, 11))
     pq.write_table(
-        pa.table({"o_orderkey": keys, "cents": [k * 100 for k in keys]}),
-        data,
+        pa.table({key: keys, col: [value(k) for k in keys]}), data
     )
     eq = str(root / "deletes" / "eq.parquet")
-    pq.write_table(pa.table({"o_orderkey": [3, 4]}), eq)  # keys 3,4
+    pq.write_table(pa.table({key: [3, 4]}), eq)  # keys 3,4
     dv = str(root / "deletes" / "pos" / "dv.parquet")
     pq.write_table(  # ordinals of keys 4,5 -> rows 3,4
         pa.table({"file_path": [data, data], "row_index": [3, 4]}), dv
     )
-    (log / "v1.json").write_text(json.dumps({"files": [data]}))
-    (log / "v2.json").write_text(
-        json.dumps({"files": [data, eq, dv]})
-    )
 
-    reader = _mor_cdf_datasource()(
-        options={"log_dir": str(log)}
-    ).streamReader(None)
+    def reader_over(name, head_files):
+        log = root / name
+        log.mkdir()
+        (log / "v1.json").write_text(json.dumps({"files": [data]}))
+        (log / "v2.json").write_text(json.dumps({"files": head_files}))
+        return src(options={"log_dir": str(log)}).streamReader(None)
+
+    def events(reader, parts):
+        return sorted(
+            (e[0], e[1], e[2], e[3]) for p in parts for e in reader.read(p)
+        )
+
+    def deleted(ks):
+        return [(2, "delete", k, value(k)) for k in ks]
+
+    reader = reader_over("log", [data, eq, dv])
     parts = reader.partitions({"version": 1}, {"version": 2})
     assert sorted(p.kind for p in parts) == ["mor_delete", "pos_delete"]
-    events = [e for p in parts for e in reader.read(p)]
-    deleted = sorted(e[2] for e in events)
-    # key 3: eq only; key 4: BOTH (once!); key 5: DV only
-    assert deleted == [3, 4, 5]
+    if src.READER.POSITIONAL:
+        # key 3: eq only; key 4: BOTH (once!); key 5: DV only
+        assert events(reader, parts) == deleted([3, 4, 5])
+        return
+    for p in parts:
+        with pytest.raises(RuntimeError, match="positional delete"):
+            list(reader.read(p))
+    eq_only = reader_over("log_eq", [data, eq])
+    parts = eq_only.partitions({"version": 1}, {"version": 2})
+    assert [p.kind for p in parts] == ["mor_delete"]
+    assert events(eq_only, parts) == deleted([3, 4])
 
 
 def test_dedup_index_compaction_log_lifecycle(spark):
@@ -337,7 +367,7 @@ def test_doc_cdf_inherits_rewrite_awareness(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sparkgraft.streaming import _doc_cdf_datasource
+    from sparkgraft.tablelog import DocCDFSource
 
     root = tmp_path / "doclog"
     root.mkdir()
@@ -355,7 +385,7 @@ def test_doc_cdf_inherits_rewrite_awareness(spark, tmp_path):
         json.dumps({"files": [c], "op": "rewrite"})
     )
 
-    reader = _doc_cdf_datasource()(
+    reader = DocCDFSource(
         options={"log_dir": str(log)}
     ).streamReader(None)
     ins = reader.partitions({"version": 0}, {"version": 1})
@@ -367,9 +397,9 @@ def test_doc_cdf_inherits_rewrite_awareness(spark, tmp_path):
 
 
 def test_cdf_schema_evolution_planning_is_head_schema(spark):
-    """The plan-time half directly: `_head_event_schema` resolves the
+    """The plan-time half directly: `head_event_schema` resolves the
     event schema from the head manifest's schema_version stamp."""
-    from sparkgraft.streaming import _head_event_schema
+    from sparkgraft.tablelog import head_event_schema
 
     sparkgraft.QUERIES["stream_cdf_schema_evolution"](spark, SF_DIR)
     root = os.path.join(
@@ -378,7 +408,7 @@ def test_cdf_schema_evolution_planning_is_head_schema(spark):
         f"-pid{os.getpid()}",
     )
     log_dir = os.path.join(root, "log")
-    schema, sv = _head_event_schema(log_dir)
+    schema, sv = head_event_schema(log_dir)
     assert sv == 2
     assert schema.fieldNames() == [
         "version", "change_type", "o_orderkey", "cents", "channel",

@@ -29,15 +29,8 @@ def test_log_cdf_reader_initial_offset_resumes_from_state_dir(tmp_path):
     the stream checkpoint is lost — not re-announce version 0 (which
     would replay 1.._last in one oversized batch, breaking the
     one-commit-per-batch contract and the feed_batch-stamp dedup)."""
-    from sparkgraft.streaming import _log_cdf_reader_base
+    from sparkgraft.tablelog import LogCDFReader as base
 
-    base_cls = _log_cdf_reader_base()
-
-    class _Concrete(base_cls):  # read() is abstract on the base
-        def read(self, partition):  # pragma: no cover - never driven
-            return iter([])
-
-    base = _Concrete
     log_dir = str(tmp_path / "log")
     os.makedirs(log_dir)
 
@@ -54,9 +47,8 @@ def test_log_cdf_reader_initial_offset_resumes_from_state_dir(tmp_path):
 
 def test_txn_cdf_reader_initial_offset_resumes_from_state_dir(tmp_path):
     """Same checkpoint-lost resume contract on the txn-root reader."""
-    from sparkgraft.streaming import _txn_cdf_datasource
+    from sparkgraft.tablelog import TxnCDFSource as src_cls
 
-    src_cls = _txn_cdf_datasource()
     log_dir = str(tmp_path / "log")
     os.makedirs(log_dir)
     state = str(tmp_path / "state")
@@ -89,24 +81,12 @@ def test_vacuum_horizon_contract_end_to_end(spark):
 
 
 def test_base_reader_refuses_cursor_below_vacuum_horizon(tmp_path):
-    """Unit-level pin of the contract in `_log_cdf_reader_base`: with
+    """Unit-level pin of the contract in `tablelog.LogCDFReader`: with
     expired manifests present, partitions() raises for any start at or
     below the newest expired version and plans normally above it."""
     import pytest
 
-    from sparkgraft.streaming import _log_cdf_reader_base
-
-    base_cls = _log_cdf_reader_base()
-
-    class _Part:
-        def __init__(self, version, kind, path, new_dels=(), prior=()):
-            self.version, self.kind, self.path = version, kind, path
-
-    class _Concrete(base_cls):
-        PARTITION = _Part
-
-        def read(self, partition):  # pragma: no cover - never driven
-            return iter([])
+    from sparkgraft.tablelog import LogCDFReader
 
     log_dir = tmp_path / "log"
     log_dir.mkdir()
@@ -118,7 +98,7 @@ def test_base_reader_refuses_cursor_below_vacuum_horizon(tmp_path):
         '{"snapshot": 4, "files": ["a", "b"]}'
     )
 
-    r = _Concrete({"log_dir": str(log_dir)})
+    r = LogCDFReader({"log_dir": str(log_dir)})
     for stale in (0, 1, 2):
         with pytest.raises(RuntimeError, match="vacuum horizon"):
             r.partitions({"version": stale}, {"version": 4})
@@ -193,9 +173,8 @@ def test_doc_cdf_planner_metadata_only_commit_zero_events(tmp_path):
     """Planner pin for the r13 evolution key: a commit whose file list
     is UNCHANGED from its parent (the add-column metadata commit)
     plans ZERO real partitions — only the empty-batch fallback."""
-    from sparkgraft.streaming import _doc_cdf_datasource
+    from sparkgraft.tablelog import DocCDFSource as src_cls
 
-    src_cls = _doc_cdf_datasource()
     log_dir = tmp_path / "log"
     log_dir.mkdir()
     (log_dir / "v1.json").write_text(

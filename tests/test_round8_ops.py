@@ -7,11 +7,11 @@ import json
 import os
 import threading
 
-from sparkgraft.scans import (
-    _commit_snapshot,
-    _log_versions,
-    _read_manifest,
-    _try_publish,
+from sparkgraft.tablelog import (
+    commit_snapshot,
+    log_versions,
+    read_manifest,
+    try_publish,
 )
 
 
@@ -32,7 +32,7 @@ def test_concurrent_commit_contention_is_linear_and_lossless(tmp_path):
         barrier.wait()  # maximize contention on the first CAS
         out = []
         for k in range(n_commits):
-            out.append(_commit_snapshot(str(log), [f"w{w}_c{k}.parquet"]))
+            out.append(commit_snapshot(str(log), [f"w{w}_c{k}.parquet"]))
         results[f"w{w}"] = out
 
     threads = [
@@ -44,7 +44,7 @@ def test_concurrent_commit_contention_is_linear_and_lossless(tmp_path):
         t.join()
 
     total = n_writers * n_commits
-    versions = _log_versions(str(log))
+    versions = log_versions(str(log))
     # linear, contiguous, one winner per version
     assert versions == list(range(1, total + 1))
     won = sorted(v for outs in results.values() for v, _ in outs)
@@ -53,7 +53,7 @@ def test_concurrent_commit_contention_is_linear_and_lossless(tmp_path):
     # snapshot carries every writer's every file exactly once
     prev: list[str] = []
     for v in versions:
-        files = _read_manifest(str(log), v)["files"]
+        files = read_manifest(str(log), v)["files"]
         assert len(files) == len(prev) + 1
         assert set(prev) <= set(files)
         prev = files
@@ -70,9 +70,9 @@ def test_try_publish_is_an_atomic_cas(tmp_path):
     returns False and the winner's manifest bytes are untouched."""
     log = tmp_path / "log"
     log.mkdir()
-    assert _try_publish(str(log), 1, ["winner.parquet"])
+    assert try_publish(str(log), 1, ["winner.parquet"])
     before = (log / "v1.json").read_bytes()
-    assert not _try_publish(str(log), 1, ["loser.parquet"])
+    assert not try_publish(str(log), 1, ["loser.parquet"])
     assert (log / "v1.json").read_bytes() == before
     assert json.loads(before)["files"] == ["winner.parquet"]
     # no temp-file debris from either attempt
@@ -86,15 +86,15 @@ def test_rewrite_commit_rebased_onto_append_keeps_appended_files(tmp_path):
     would silently drop it (lost update)."""
     log = tmp_path / "log"
     log.mkdir()
-    _commit_snapshot(str(log), ["a.parquet", "b.parquet"])  # v1
+    commit_snapshot(str(log), ["a.parquet", "b.parquet"])  # v1
     # compactor reads v1, stages its rewrite; an append lands first
-    _commit_snapshot(str(log), ["c.parquet"])  # v2 (the racer)
-    v, retries = _commit_snapshot(
+    commit_snapshot(str(log), ["c.parquet"])  # v2 (the racer)
+    v, retries = commit_snapshot(
         str(log), ["ab_compacted.parquet"],
         remove_files=["a.parquet", "b.parquet"],
     )
     assert (v, retries) == (3, 0)  # head re-read at commit time: clean CAS
-    assert sorted(_read_manifest(str(log), 3)["files"]) == [
+    assert sorted(read_manifest(str(log), 3)["files"]) == [
         "ab_compacted.parquet",
         "c.parquet",  # the concurrent append survived the rewrite
     ]
@@ -106,19 +106,19 @@ def test_conflicting_rewrites_abort_instead_of_retrying(tmp_path):
     re-publish — re-applying the removes would resurrect rewritten data."""
     import pytest
 
-    from sparkgraft.scans import CommitConflict
+    from sparkgraft.tablelog import CommitConflict
 
     log = tmp_path / "log"
     log.mkdir()
-    _commit_snapshot(str(log), ["a.parquet", "b.parquet"])  # v1
-    _commit_snapshot(
+    commit_snapshot(str(log), ["a.parquet", "b.parquet"])  # v1
+    commit_snapshot(
         str(log), ["ab_v1.parquet"], remove_files=["a.parquet", "b.parquet"]
     )  # v2: first rewrite wins
     with pytest.raises(CommitConflict):
-        _commit_snapshot(
+        commit_snapshot(
             str(log),
             ["ab_v2.parquet"],
             remove_files=["a.parquet", "b.parquet"],
         )
     # the winning rewrite is untouched
-    assert _read_manifest(str(log), 2)["files"] == ["ab_v1.parquet"]
+    assert read_manifest(str(log), 2)["files"] == ["ab_v1.parquet"]

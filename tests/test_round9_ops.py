@@ -20,12 +20,12 @@ from pyspark.sql import functions as F
 import sparkgraft
 from conftest import SF_DIR
 from sparkgraft.catalog import load
-from sparkgraft.scans import (
-    _commit_snapshot,
-    _data_files_of,
-    _log_versions,
-    _read_manifest,
-    _split_head_files,
+from sparkgraft.tablelog import (
+    commit_snapshot,
+    data_files_of,
+    log_versions,
+    read_manifest,
+    split_head_files,
 )
 
 SF_DIR_BIG = "/root/testdata/sf0.1"
@@ -38,7 +38,7 @@ def test_mor_delete_equals_cow_delete(spark, tmp_path):
     src = load(spark, SF_DIR, "orders").select("o_orderkey", "o_totalprice")
     base = str(tmp_path / "base")
     src.repartition(2).write.parquet(base)
-    base_files = _data_files_of(base)
+    base_files = data_files_of(base)
     pred = F.col("o_orderkey") % 7 == 0
 
     # COW: rewrite the files without the matching rows.
@@ -75,9 +75,9 @@ def test_mor_key_time_travel_and_zero_rewrite(spark):
 
     sparkgraft.QUERIES["sink_merge_on_read_delete"](spark, SF_DIR).collect()
     log_dir = os.path.join(_scratch(SF_DIR, "mor_delete_table"), "log")
-    v1 = _read_manifest(log_dir, 1)["files"]
-    v2 = _read_manifest(log_dir, 2)["files"]
-    data2, dels2 = _split_head_files(v2)
+    v1 = read_manifest(log_dir, 1)["files"]
+    v2 = read_manifest(log_dir, 2)["files"]
+    data2, dels2 = split_head_files(v2)
     assert sorted(data2) == sorted(v1)
     assert len(dels2) == 1
     n_v1 = spark.read.parquet(*v1).count()
@@ -133,7 +133,7 @@ def test_partition_evolution_plans_strict_subsets(spark):
     sparkgraft.QUERIES["sink_partition_evolution"](spark, SF_DIR).collect()
     root = _scratch(SF_DIR, "part_evo_table")
     log_dir = os.path.join(root, "log")
-    head = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
+    head = read_manifest(log_dir, log_versions(log_dir)[-1])["files"]
     gen1 = [f for f in head if f.startswith(os.path.join(root, "gen1"))]
     gen2 = [f for f in head if f.startswith(os.path.join(root, "gen2"))]
     assert gen1 and gen2
@@ -173,8 +173,8 @@ def test_optimize_zorder_improves_clustering(spark):
     sparkgraft.QUERIES["sink_optimize_zorder"](spark, SF_DIR).collect()
     root = _scratch(SF_DIR, "optimize_zorder_table")
     log_dir = os.path.join(root, "log")
-    before = _read_manifest(log_dir, 4)["files"]
-    after = _read_manifest(log_dir, 5)["files"]
+    before = read_manifest(log_dir, 4)["files"]
+    after = read_manifest(log_dir, 5)["files"]
 
     def mean_c_fraction(files):
         o = load(spark, SF_DIR, "orders")
@@ -253,8 +253,8 @@ def test_mor_upsert_sequence_scoping(spark):
 
     sparkgraft.QUERIES["sink_merge_on_read_upsert"](spark, SF_DIR).collect()
     log_dir = os.path.join(_scratch(SF_DIR, "mor_upsert_table"), "log")
-    head = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
-    data, dels = _split_head_files(head)
+    head = read_manifest(log_dir, log_versions(log_dir)[-1])["files"]
+    data, dels = split_head_files(head)
     keys = spark.read.parquet(*dels)
     naive = (
         spark.read.parquet(*data)
@@ -285,7 +285,7 @@ def test_log_checkpoint_reader_skips_prefix(spark):
 
     sparkgraft.QUERIES["scan_log_checkpoint"](spark, SF_DIR).collect()
     log_dir = os.path.join(_scratch(SF_DIR, "log_checkpoint_table"), "log")
-    assert _log_versions(log_dir) == list(range(1, 13))
+    assert log_versions(log_dir) == list(range(1, 13))
     with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
         ckpt_ver = int(fh.read())
     assert ckpt_ver == 10
@@ -375,9 +375,9 @@ def test_wap_rejected_batch_never_reachable_from_main(spark):
 
     assert ref("main") == 3
     assert ref("wap_batch1") == 2  # rejected but preserved
-    v1 = set(_read_manifest(log_dir, 1)["files"])
-    v2 = set(_read_manifest(log_dir, 2)["files"])
-    v3 = set(_read_manifest(log_dir, 3)["files"])
+    v1 = set(read_manifest(log_dir, 1)["files"])
+    v2 = set(read_manifest(log_dir, 2)["files"])
+    v3 = set(read_manifest(log_dir, 3)["files"])
     bad_only = v2 - v1
     assert bad_only  # the staged batch added files
     assert not bad_only & v1 and not bad_only & v3

@@ -314,7 +314,7 @@ def test_acid_append_skips_replayed_commit(spark):
     import os
     import tempfile
 
-    from sparkgraft.scans import _log_versions, _read_manifest
+    from sparkgraft.tablelog import log_versions, read_manifest
 
     out = sparkgraft.QUERIES["stream_acid_append"](spark, SF_DIR)
     got = {(r.window_start, r.event_type, r.n) for r in out.collect()}
@@ -334,6 +334,6 @@ def test_acid_append_skips_replayed_commit(spark):
         "log",
     )
     batch_ids = [
-        _read_manifest(log, v)["batch_id"] for v in _log_versions(log)
+        read_manifest(log, v)["batch_id"] for v in log_versions(log)
     ]
     assert sorted(batch_ids) == [0, 1, 2, 3]  # each exactly once
